@@ -136,12 +136,26 @@ class KLL:
 
     @classmethod
     def from_bytes(cls, b: bytes) -> "KLL":
+        """Inverse of :meth:`to_bytes`. Raises ValueError on a bad magic, a
+        blob shorter or longer than its header and level lengths declare,
+        or an ``n`` other than the weighted item count the levels hold."""
+        if len(b) < _HDR.size:
+            raise ValueError("KLL.from_bytes: truncated header")
         magic, k, n_levels, n, lcg = _HDR.unpack_from(b)
         if magic != _MAGIC:
             raise ValueError("KLL.from_bytes: bad magic")
         off = _HDR.size
+        if len(b) < off + 4 * n_levels:
+            raise ValueError("KLL.from_bytes: truncated level lengths")
         lens = np.frombuffer(b, dtype=np.uint32, count=n_levels, offset=off)
         off += 4 * n_levels
+        want = off + 8 * int(lens.sum(dtype=np.uint64))
+        if len(b) != want:
+            raise ValueError(
+                f"KLL.from_bytes: {len(b)} bytes, header declares {want}")
+        if n != sum(int(ln) << h for h, ln in enumerate(lens)):
+            raise ValueError("KLL.from_bytes: n disagrees with the weighted "
+                             "item count of the levels")
         out = cls(k)
         out.n = n
         out._lcg = lcg

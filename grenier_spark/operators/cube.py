@@ -42,9 +42,12 @@ def sketch_cube(df: DataFrame, dims: "list[str]", specs: "list[SketchSpec]",
 
     ONE leaf build pass at the finest grouping, then ONE lattice merge:
     each leaf row explodes to its 2^d grouping-set label tuples and a
-    single ``merge_partials`` reduces them — two bounded-fan-in shuffle
-    waves total, independent of d (not 2^d separate merge stages). Leaf
-    cells ride the same pass (a one-blob merge is the identity).
+    single ``merge_partials`` reduces them — two shuffle waves total,
+    independent of d (not 2^d separate merge stages). A cell's leaf count
+    N is not known when the plan is made, so both merge levels run: level
+    2a folds about N/``fanout`` leaf rows per (cell, salt), level 2b at
+    most ``fanout`` per cell. Leaf cells ride the same pass (a one-blob
+    merge is the identity).
     """
     if not dims:
         raise ValueError("sketch_cube: need at least one dimension")

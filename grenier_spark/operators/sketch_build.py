@@ -5,16 +5,23 @@ Pipeline shape::
     df.select(group_cols + value_cols)           # Catalyst prunes the scan
       .mapInArrow(partial_builder, ...)          # level 1: per-partition
                                                  #   vectorized numpy updates
-      .groupBy(group, name, salt).applyInPandas  # level 2a: fan-in merge
-      .groupBy(group, name).applyInPandas        # level 2b: final merge
+      .groupBy(group, name, salt).applyInArrow   # level 2a: salted merge
+      .groupBy(group, name).applyInArrow         # level 2b: final merge
 
 Level 1 turns token-scale data into sketch-scale rows (one KB-sized state
 per (input partition x group x spec)); only sketch-sized rows ever shuffle.
-The two-stage merge bounds any single reducer's fan-in to ``fanout`` rows,
-so the plan survives 100k input partitions (1000-executor scale) without a
-single-task funnel. HLL/CMS/Bloom merges are exact and associative, so the
-result is BIT-IDENTICAL to a single-threaded build regardless of
-partitioning (tests/test_spark_pipeline.py asserts this parity).
+With N partial rows per (group, spec), level 2a hashes them over
+``fanout`` salts by partition id, so each (group, spec, salt) task folds
+about N/``fanout`` rows and emits one; level 2b then folds at most
+``fanout`` rows per (group, spec). Level 2a runs only when one merge key
+can receive more than ``fanout`` partial rows: a caller that knows N from
+its own plan (the scan's partition count, the reader task count, the
+checkpointed file count) and finds N <= ``fanout`` gets level 2b alone, one
+shuffle and one Python stage fewer, whose one merge folds at most
+``fanout`` rows per key like level 2b; an unknown N keeps both levels.
+HLL/CMS/Bloom merges are exact and associative, so the result is
+BIT-IDENTICAL to a single-threaded build regardless of partitioning or
+merge depth (tests/test_spark_pipeline.py asserts this parity).
 
 Per-partition metrics (partition id, rows, values, build time) ride along in
 the partial rows and survive aggregation as sums — the lineage/metrics
@@ -26,13 +33,13 @@ value column, then O(1) slices per group — no per-group rescans.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -343,6 +350,17 @@ _TAIL_FIELDS = [
 ]
 
 
+def _group_order(codes: np.ndarray, n_groups: int):
+    """(order, bounds): the stable permutation that sorts ``codes`` and each
+    group's span in it — group g's rows are ``order[bounds[g]:bounds[g +
+    1]]``, in input order. One O(n log n) sort instead of a mask pass per
+    group."""
+    order = np.argsort(codes, kind="stable")
+    bounds = np.zeros(n_groups + 1, dtype=np.int64)
+    np.cumsum(np.bincount(codes, minlength=n_groups), out=bounds[1:])
+    return order, bounds
+
+
 def _grouped_column(batch: pa.RecordBatch, col: str, codes: np.ndarray,
                     n_groups: int):
     """Group-sorted flat values + group boundaries for a list/scalar column.
@@ -380,10 +398,8 @@ def _grouped_column(batch: pa.RecordBatch, col: str, codes: np.ndarray,
         bounds = np.zeros(n_groups + 1, dtype=np.int64)
         np.cumsum([len(p) for p in parts], out=bounds[1:])
         return np.concatenate(parts) if parts else values, bounds
-    order = np.argsort(vcodes, kind="stable")
-    sorted_vals = values[order]
-    bounds = np.searchsorted(vcodes[order], np.arange(n_groups + 1))
-    return sorted_vals, bounds
+    order, bounds = _group_order(vcodes, n_groups)
+    return values[order], bounds
 
 
 def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
@@ -413,7 +429,9 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
             yield rb
 
     partials = src.mapInArrow(partial_builder, out_schema)
-    return merge_partials(partials, kind_of, group_cols, fanout)
+    # each level-1 task emits one row per (group, spec) it saw
+    return _merge_partials(partials, kind_of, group_cols, fanout,
+                           _scan_partitions(src))
 
 
 def _batch_group_codes(batch: pa.RecordBatch, group_cols: "list[str]"):
@@ -554,6 +572,23 @@ class _Accumulator:
                                self.arrow_schema, self.t0)
 
 
+def _reader_threads(spark, n_tasks: int) -> bool:
+    """Default ``use_threads`` for :func:`build_sketches_from_files`.
+
+    An Arrow decode thread-pool per concurrent task oversubscribes the box
+    when tasks ~ cores (measured 6x wall blowup under load at 64 tasks);
+    with FEW fat readers the idle cores belong to the decoder, so threads
+    help. The crossover is the executor-core budget: threads on only when
+    readers use <= half the cores. When that budget cannot be read, threads
+    stay off: the local cpu count says nothing about the executors, and
+    guessing high is the oversubscription this default exists to avoid."""
+    try:
+        slots = int(spark.sparkContext.defaultParallelism)
+    except Exception:
+        return False
+    return n_tasks * 2 <= slots
+
+
 def build_sketches_from_files(spark, files: "list[str]",
                               specs: "list[SketchSpec]",
                               group_cols: "list[str] | None" = None,
@@ -600,16 +635,7 @@ def build_sketches_from_files(spark, files: "list[str]",
                 .repartition(n_tasks))
 
     if use_threads is None:
-        # an Arrow decode thread-pool per concurrent task oversubscribes
-        # the box when tasks ~ cores (measured 6x wall blowup under load
-        # at 64 tasks); with FEW fat readers the idle cores belong to the
-        # decoder, so threads help. The crossover is the executor-core
-        # budget: threads on only when readers use <= half the cores.
-        try:
-            slots = int(spark.sparkContext.defaultParallelism)
-        except Exception:
-            slots = os.cpu_count() or 8
-        use_threads = n_tasks * 2 <= slots
+        use_threads = _reader_threads(spark, n_tasks)
 
     def worker(batches):
         acc = _Accumulator(specs, group_cols, value_cols, out_schema,
@@ -625,7 +651,7 @@ def build_sketches_from_files(spark, files: "list[str]",
             yield out
 
     partials = paths_df.mapInArrow(worker, out_schema)
-    return merge_partials(partials, kind_of, group_cols, fanout)
+    return _merge_partials(partials, kind_of, group_cols, fanout, n_tasks)
 
 
 def build_sketches_deterministic(df: DataFrame, specs: "list[SketchSpec]",
@@ -664,29 +690,66 @@ def build_sketches_deterministic(df: DataFrame, specs: "list[SketchSpec]",
 
 def merge_partials(partials: DataFrame, kind_of: "dict[str, str]",
                    group_cols: "list[str]", fanout: int = 32) -> DataFrame:
-    """Two-stage associative merge of partial-sketch rows (level 2a + 2b)."""
+    """Associative merge of partial-sketch rows: one row per (group, spec).
+
+    The rows per merge key are not known here, so both levels run (the
+    module docstring states the fan-in each one has)."""
+    return _merge_partials(partials, kind_of, group_cols, fanout, None)
+
+
+def _merge_partials(partials: DataFrame, kind_of: "dict[str, str]",
+                    group_cols: "list[str]", fanout: int,
+                    rows_per_key: "int | None") -> DataFrame:
+    """merge_partials with the caller's bound on partial rows per merge
+    key. A bound within ``fanout`` plans the final merge alone; an unknown
+    (None) or larger bound plans the salted level 2a first."""
     merge_keys = group_cols + ["sketch_name"]
-    out_fields = [f for f in partials.schema.fields if f.name != "_salt"]
-    out_schema = StructType(out_fields)
-    names = [f.name for f in out_fields]
+    out_schema = partials.schema
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        kind = kind_of[pdf["sketch_name"].iloc[0]]
-        blob = _merge_blobs(kind, [bytes(b) for b in pdf["sketch"]])
-        head = pdf.iloc[:1].copy()
-        head["sketch"] = [blob]
-        head["n_rows"] = np.int64(pdf["n_rows"].sum())
-        head["n_values"] = np.int64(pdf["n_values"].sum())
-        head["part_id"] = np.int32(-1)
-        head["build_us"] = np.int64(pdf["build_us"].sum())
-        return head[names]
+    def merge_group(table: pa.Table) -> pa.Table:
+        kind = kind_of[table.column("sketch_name")[0].as_py()]
+        merged = {"sketch": [_merge_blobs(kind,
+                                          table.column("sketch").to_pylist())],
+                  "part_id": [-1]}
+        for c in ("n_rows", "n_values", "build_us"):
+            merged[c] = [pc.sum(table.column(c)).as_py()]
+        head = table.slice(0, 1)
+        return pa.Table.from_arrays(
+            [pa.array(merged[f.name], f.type) if f.name in merged
+             else head.column(f.name).cast(f.type) for f in arrow_schema],
+            schema=arrow_schema)
 
-    level2a = (partials
-               .withColumn("_salt", F.pmod(F.col("part_id"), F.lit(fanout)))
-               .groupBy(*merge_keys, "_salt")
-               .applyInPandas(merge_group, out_schema))
-    return (level2a.groupBy(*merge_keys)
-            .applyInPandas(merge_group, out_schema))
+    if rows_per_key is None or rows_per_key > fanout:
+        partials = (partials
+                    .withColumn("_salt",
+                                F.pmod(F.col("part_id"), F.lit(fanout)))
+                    .groupBy(*merge_keys, "_salt")
+                    .applyInArrow(merge_group, out_schema))
+    return partials.groupBy(*merge_keys).applyInArrow(merge_group, out_schema)
+
+
+def _scan_partitions(df: DataFrame) -> "int | None":
+    """Partition count of ``df`` when its physical plan is ONE file scan
+    under narrow operators only (no Exchange, no second input, no
+    bucketing), else None. Read from the planned scan's input RDD, so no
+    Spark job runs. A streaming DataFrame has no batch plan to read."""
+    if df.isStreaming:
+        return None
+    stack, leaves = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.getClass().getSimpleName():
+            return None
+        kids = node.children()
+        if kids.length() == 0:
+            leaves.append(node)
+        stack.extend(kids.apply(i) for i in range(kids.length()))
+    if (len(leaves) != 1
+            or leaves[0].getClass().getSimpleName() != "FileSourceScanExec"
+            or leaves[0].relation().bucketSpec().isDefined()):
+        return None
+    return int(leaves[0].inputRDD().getNumPartitions())
 
 
 def build_dd_weighted(df: DataFrame, value_col: str, weight_col: str,
@@ -729,8 +792,6 @@ def build_dd_weighted(df: DataFrame, value_col: str, weight_col: str,
     arrow_schema = to_arrow_schema(out_schema)
 
     def builder(batches):
-        import pyarrow.compute as pc
-
         t0 = time.monotonic()
         states: dict = {}
         counts: dict = {}
@@ -748,20 +809,20 @@ def build_dd_weighted(df: DataFrame, value_col: str, weight_col: str,
             vals = np.asarray(varr.to_numpy(zero_copy_only=False),
                               dtype=np.float64)[keep]
             w = warr.filter(ok).to_numpy(zero_copy_only=False)
-            vcodes = codes[keep]
             # float64 NaN values filter like NULL (same contract as the
             # unweighted quantile-kind path in _grouped_column)
             fin = ~np.isnan(vals)
-            vals, w, vcodes = vals[fin], w[fin], vcodes[fin]
+            order, bounds = _group_order(codes[keep][fin], len(gkeys))
+            vals, w = vals[fin][order], w[fin][order]
             for g, gkey in enumerate(gkeys):
                 st = states.get(gkey)
                 if st is None:
                     st = states.setdefault(gkey, DDSketch(alpha))
                 cnt = counts.setdefault(gkey, [0, 0])
                 cnt[0] += int(row_counts[g])
-                m = vcodes == g
-                st.update_batch_weighted(vals[m], w[m])
-                cnt[1] += int(m.sum())
+                lo, hi = bounds[g], bounds[g + 1]
+                st.update_batch_weighted(vals[lo:hi], w[lo:hi])
+                cnt[1] += int(hi - lo)
         rb = _flush_partials(
             [(gkey, name, st.to_bytes(), counts[gkey][0], counts[gkey][1])
              for gkey, st in states.items()],
@@ -817,8 +878,6 @@ def build_priority_sample(df: DataFrame, k: int, weight_col: str,
     arrow_schema = to_arrow_schema(out_schema)
 
     def builder(batches):
-        import pyarrow.compute as pc
-
         t0 = time.monotonic()
         states: dict = {}
         counts: dict = {}
@@ -837,16 +896,17 @@ def build_priority_sample(df: DataFrame, k: int, weight_col: str,
             prios = np.asarray(parr.filter(ok)
                                .to_numpy(zero_copy_only=False),
                                dtype=np.float64)
-            vcodes = codes[keep]
+            order, bounds = _group_order(codes[keep], len(gkeys))
+            ids, w, prios = ids[order], w[order], prios[order]
             for g, gkey in enumerate(gkeys):
                 st = states.get(gkey)
                 if st is None:
                     st = states.setdefault(gkey, PrioritySample(k))
                 cnt = counts.setdefault(gkey, [0, 0])
                 cnt[0] += int(row_counts[g])
-                m = vcodes == g
-                st.update_batch(ids[m], w[m], prios[m])
-                cnt[1] += int(m.sum())
+                lo, hi = bounds[g], bounds[g + 1]
+                st.update_batch(ids[lo:hi], w[lo:hi], prios[lo:hi])
+                cnt[1] += int(hi - lo)
         rb = _flush_partials(
             [(gkey, name, st.to_bytes(), counts[gkey][0], counts[gkey][1])
              for gkey, st in states.items()],

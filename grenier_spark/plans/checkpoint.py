@@ -27,7 +27,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.sketch_build import SketchSpec, build_sketches, merge_partials
+from ..operators.sketch_build import (SketchSpec, _merge_partials,
+                                      build_sketches)
 from ..sources.tableio import SnapshotTable
 
 
@@ -176,7 +177,7 @@ class CheckpointedSketchJob:
                 f"lineage integrity violation: {len(missing)}/{len(want)} "
                 f"input files covered by neither checkpoint rows nor a "
                 f"coverage declaration: {sorted(missing)[:3]}...")
-        return self._final_merge(merged_rows)
+        return self._final_merge(merged_rows, len(want))
 
     def history(self, spark) -> DataFrame:
         """Metric evolution across input snapshots from checkpoint state
@@ -199,21 +200,28 @@ class CheckpointedSketchJob:
         rows = self.table.read(spark) if self.table.files() else None
         if rows is None:
             raise ValueError("checkpoint holds no partials — run() first")
-        sids = sorted(r.snapshot_id for r in
-                      rows.select("snapshot_id").distinct().collect())
+        per_snap = sorted(
+            (r.snapshot_id, r.n_files) for r in rows.groupBy("snapshot_id")
+            .agg(F.countDistinct("lineage_file").alias("n_files")).collect())
         out = None
-        for s in sids:  # few snapshots; each merge is a KB-row Spark job
-            m = (self._final_merge(rows.where(F.col("snapshot_id") <= s))
+        n_files = 0
+        for s, n in per_snap:  # few snapshots; each merge is a KB-row job
+            n_files += n
+            m = (self._final_merge(rows.where(F.col("snapshot_id") <= s),
+                                   n_files)
                  .withColumn("as_of_snapshot", F.lit(s).cast("long")))
             out = m if out is None else out.unionByName(m)
         return out
 
-    def _final_merge(self, partial_rows: DataFrame) -> DataFrame:
+    def _final_merge(self, partial_rows: DataFrame,
+                     n_files: int) -> DataFrame:
         kind_of = {s.name: s.kind for s in self.specs}
         rows = partial_rows.drop("snapshot_id")
         # the per-file rows are already level-2 outputs for their file; the
-        # cross-file merge groups only by (group, spec)
+        # cross-file merge groups only by (group, spec), so each merge key
+        # has at most one row per input file
         rows = rows.withColumn("part_id",
                                F.abs(F.hash("lineage_file")).cast("int"))
         rows = rows.drop("lineage_file")
-        return merge_partials(rows, kind_of, self.group_cols, self.fanout)
+        return _merge_partials(rows, kind_of, self.group_cols, self.fanout,
+                               n_files)

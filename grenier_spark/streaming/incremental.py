@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.sketch_build import SketchSpec, build_sketches, merge_partials
+from ..operators.sketch_build import (SketchSpec, _merge_partials,
+                                      build_sketches)
 from ..sources.tableio import SnapshotTable
 
 
@@ -74,4 +75,8 @@ class IncrementalSketchSink:
         kind_of = {s.name: s.kind for s in self.specs}
         rows = rows.withColumn("part_id",
                                F.col("batch_id").cast("int")).drop("batch_id")
-        return merge_partials(rows, kind_of, self.group_cols, self.fanout)
+        # each seen batch appended one snapshot holding one row per
+        # (group, spec), so no merge key has more rows than snapshots
+        n_batches = len(self.table._read_manifest()["snapshots"])
+        return _merge_partials(rows, kind_of, self.group_cols, self.fanout,
+                               n_batches)

@@ -59,6 +59,9 @@ def test_partials_are_sketch_scale(spark, docs_tiny):
     res = build_sketches(docs, [SketchSpec.of("h", "hll", "tokens", p=10)],
                          group_cols=["source"], fanout=4)
     assert res.count() == 4  # one row per (group, spec) after final merge
+    # an Exchange under the build hides the partial-row count: the salted
+    # level 2a stays
+    assert _arrow_merges(spark, res) == 2
 
 
 def _walk_jplan(node):
@@ -66,6 +69,63 @@ def _walk_jplan(node):
     cs = node.children()
     for i in range(cs.length()):
         yield from _walk_jplan(cs.apply(i))
+
+
+def _arrow_merges(spark, df) -> int:
+    """FlatMapGroupsInArrow nodes (merge levels) in the executed plan,
+    planned with AQE off so the physical tree is concrete."""
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jplan = df._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    return sum(n.nodeName() == "FlatMapGroupsInArrow"
+               for n in _walk_jplan(jplan))
+
+
+def test_merge_is_one_level_when_fan_in_fits(spark, docs_tiny, tmp_path):
+    """A file scan of <= fanout partitions, and a checkpoint final merge
+    over <= fanout input files, merge in ONE Arrow level: no salted level
+    2a, one shuffle of partial rows."""
+    from grenier_spark.plans.checkpoint import CheckpointedSketchJob
+    from grenier_spark.sources.tableio import SnapshotTable
+
+    spec = [SketchSpec.of("h", "hll", "tokens", p=10)]
+    docs = spark.read.parquet(docs_tiny)
+    res = build_sketches(docs, spec, group_cols=["source"])
+    assert _arrow_merges(spark, res) == 1
+    assert res.count() == 4
+
+    table = SnapshotTable(str(tmp_path / "docs"))
+    table.append(docs.repartition(3))
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), spec, ["source"])
+    merged = job.run(spark, table)
+    assert len(table.files()) <= job.fanout
+    assert _arrow_merges(spark, merged) == 1
+    assert merged.count() == 4
+
+
+def test_scan_partition_bound_starts_no_job(spark, docs_tiny):
+    """Reading the scan's planned partition count is planning only: the
+    status tracker sees no new job across the call (and does see the one a
+    real action starts)."""
+    from grenier_spark.operators.sketch_build import _scan_partitions
+
+    tracker = spark.sparkContext.statusTracker()
+    src = spark.read.parquet(docs_tiny).select("source", "tokens")
+    before = set(tracker.getJobIdsForGroup())
+    n = _scan_partitions(src)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert n == src.rdd.getNumPartitions() == 1
+    src.count()
+    assert set(tracker.getJobIdsForGroup()) - before
+    # a shuffle below the build makes the count unknown, and a stream has
+    # no batch plan to plan (build_sketches over it must still construct)
+    assert _scan_partitions(src.repartition(3)) is None
+    stream = spark.readStream.format("rate").load()
+    assert _scan_partitions(stream) is None
+    assert build_sketches(stream, [SketchSpec.of("h", "hll", "value", p=10)]
+                          ).isStreaming
 
 
 def _exchange_output_names(df) -> "list[list[str]]":

@@ -55,6 +55,36 @@ def test_kll_serde(data):
     assert k2.n == k.n
 
 
+def test_kll_from_bytes_rejects_truncated_and_trailing(data):
+    """Every strict prefix of a real blob and the blob plus one byte raise
+    ValueError: the header's level lengths fix the exact size."""
+    k = KLL(32, seed=1)
+    k.update_batch(data[:5_000])
+    b = k.to_bytes()
+    assert KLL.from_bytes(b).to_bytes() == b
+    for cut in range(len(b)):
+        with pytest.raises(ValueError):
+            KLL.from_bytes(b[:cut])
+    with pytest.raises(ValueError):
+        KLL.from_bytes(b + b"\x00")
+
+
+def test_kll_from_bytes_rejects_inconsistent_n(data):
+    """n must equal the weighted item count the levels imply (level h items
+    weigh 2**h) — the invariant every update, compaction and merge keeps."""
+    import struct
+
+    k = KLL(32, seed=1)
+    k.update_batch(data[:5_000])
+    b = k.to_bytes()
+    assert k.n == sum(len(lv) << h for h, lv in enumerate(k.levels))
+    n_off = struct.calcsize("<4sII")
+    for n in (k.n - 1, k.n + 1, 0):
+        bad = b[:n_off] + struct.pack("<Q", n) + b[n_off + 8:]
+        with pytest.raises(ValueError):
+            KLL.from_bytes(bad)
+
+
 def test_kll_rank_query(data):
     k = KLL(200, seed=1)
     k.update_batch(data)

@@ -209,6 +209,75 @@ def test_global_build_partitioning_invariance(spark, docs_df, local_rows):
     assert int(many.n_values[0]) == int(local_rows.n_tok.sum())
 
 
+def test_merge_depth_parity(spark, tmp_path, local_rows):
+    """One merge level and two give the same result. Over a three-file
+    scan the default fanout merges in one level, fanout=1 forces the salted
+    level 2a. hll/cms/bloom bytes and n_rows/n_values are identical; on the
+    SAME partial rows the build_us sums are too; KLL (byte order-sensitive
+    by contract) stays within its rank-error bound either way."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from grenier_spark.core.kll import KLL
+    from grenier_spark.operators.sketch_build import (_merge_partials,
+                                                      _scan_partitions,
+                                                      merge_partials)
+
+    tbl = pa.Table.from_pandas(local_rows, preserve_index=False)
+    for i, lo in enumerate(range(0, N_DOCS, 400)):
+        pq.write_table(tbl.slice(lo, 400), str(tmp_path / f"part-{i}.parquet"))
+    df = spark.read.parquet(str(tmp_path))
+    n_parts = _scan_partitions(df)
+    assert n_parts is not None and 1 < n_parts <= 32
+    specs = [SketchSpec.of("h", "hll", "tokens", p=12),
+             SketchSpec.of("c", "cms", "tokens", depth=4, width=2048, seed=7),
+             SketchSpec.of("b", "bloom", "tokens", m=1 << 18, k=5, seed=7),
+             SketchSpec.of("q", "kll", "tokens", k=200)]
+    kind_of = {sp.name: sp.kind for sp in specs}
+
+    def rows(res):
+        return {(r.source, r.sketch_name): r for r in res.collect()}
+
+    # the same partial rows (one per (source, partition, spec)) merged at
+    # both depths
+    partials = (build_sketches(df.withColumn("_p", F.spark_partition_id()),
+                               specs, ["source", "_p"])
+                .withColumn("part_id", F.col("_p")).drop("_p")
+                .localCheckpoint())
+    sums = {(r.source, r.sketch_name): (r.n_rows, r.n_values, r.build_us)
+            for r in partials.groupBy("source", "sketch_name")
+            .agg(*[F.sum(c).alias(c)
+                   for c in ("n_rows", "n_values", "build_us")]).collect()}
+    results = {
+        "one-level build": rows(build_sketches(df, specs, ["source"])),
+        "two-level build": rows(build_sketches(df, specs, ["source"],
+                                               fanout=1)),
+        "one-level merge": rows(_merge_partials(partials, kind_of,
+                                                ["source"], 32, n_parts)),
+        "two-level merge": rows(merge_partials(partials, kind_of,
+                                               ["source"], fanout=2)),
+    }
+    one = results["one-level build"]
+    assert len(one) == 16
+    for depth, got in results.items():
+        assert got.keys() == one.keys(), depth
+        for key, r in got.items():
+            if kind_of[key[1]] != "kll":
+                assert bytes(r.sketch) == bytes(one[key].sketch), (depth, key)
+            assert (r.n_rows, r.n_values) == sums[key][:2], (depth, key)
+            if depth.endswith("merge"):
+                assert r.build_us == sums[key][2], (depth, key)
+            assert r.part_id == -1
+        for src in ["web", "books", "code", "wiki"]:
+            toks = local_tokens(local_rows, src).view(np.int64)
+            est = KLL.from_bytes(bytes(got[(src, "q")].sketch))
+            probes = np.quantile(toks, [0.1, 0.25, 0.5, 0.75, 0.9])
+            exact = np.array([np.mean(toks <= x) for x in probes])
+            assert np.max(np.abs(est.rank(probes) - exact)) <= 2.0 / 200, \
+                (depth, src)
+
+
 def test_estimate_columns(spark, docs_df, local_rows):
     from grenier_spark.functions import hll_card_col, kll_quantiles_col
 
@@ -408,6 +477,27 @@ def test_native_file_builder_n_tasks_invariance(spark, docs_tiny):
                    spark, files, specs, ["source"], n_tasks=n_tasks,
                    use_threads=threads).collect()}
         assert got == want, (n_tasks, threads)
+
+
+def test_native_reader_threads_off_when_core_budget_unknown(spark,
+                                                          monkeypatch):
+    """The default use_threads needs the executor-core budget; when
+    defaultParallelism cannot be read (no JVM SparkContext, as under Spark
+    Connect) the decode threads stay off rather than guessing from the
+    local cpu count."""
+    from pyspark import SparkContext
+
+    from grenier_spark.operators.sketch_build import _reader_threads
+
+    assert _reader_threads(spark, 1) is True      # 1 reader, local[4]
+    assert _reader_threads(spark, 4) is False     # readers fill the cores
+
+    def unreadable(self):
+        raise RuntimeError("defaultParallelism unavailable")
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(unreadable))
+    assert _reader_threads(spark, 1) is False
 
 
 def test_sql_function_registration(spark, docs_df):
