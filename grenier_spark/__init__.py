@@ -26,4 +26,8 @@ Layout:
                    vs-corpus ingest).
 """
 
+from . import _worker
+
 __version__ = "0.1.0"
+
+_worker.install()

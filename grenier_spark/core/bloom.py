@@ -112,11 +112,18 @@ class Bloom:
 
     @classmethod
     def from_bytes(cls, b: bytes) -> "Bloom":
+        """Inverse of :meth:`to_bytes`. Raises ValueError on a short header,
+        a bad magic, a payload other than ceil(m / 8) bytes, or a set
+        padding bit past ``m``."""
+        if len(b) < _HDR.size:
+            raise ValueError("Bloom.from_bytes: truncated header")
         magic, m, k, seed = _HDR.unpack_from(b)
         if magic != _MAGIC:
             raise ValueError("Bloom.from_bytes: bad magic")
         if len(b) != _HDR.size + (m + 7) // 8:
             raise ValueError("Bloom.from_bytes: truncated payload")
         packed = np.frombuffer(b, dtype=np.uint8, offset=_HDR.size)
+        if m % 8 and packed[-1] & ((1 << (8 - m % 8)) - 1):
+            raise ValueError("Bloom.from_bytes: padding bits past m are set")
         bits = np.unpackbits(packed)[:m].copy()
         return cls(m, k, seed, bits)

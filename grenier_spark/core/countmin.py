@@ -133,8 +133,23 @@ class CountMin:
 
     @classmethod
     def from_bytes(cls, b: bytes) -> "CountMin":
+        """Inverse of :meth:`to_bytes`. Raises ValueError on a short header,
+        a bad magic, a zero depth or width, a payload other than
+        8 * depth * width bytes, or a row whose counters do not sum to
+        ``total`` (every update, merge and fold adds the same weight to
+        each row and to ``total``)."""
+        if len(b) < _HDR.size:
+            raise ValueError("CountMin.from_bytes: truncated header")
         magic, depth, width, seed, total = _HDR.unpack_from(b)
         if magic != _MAGIC:
             raise ValueError("CountMin.from_bytes: bad magic")
+        if depth == 0 or width == 0:
+            raise ValueError("CountMin.from_bytes: zero depth or width")
+        want = _HDR.size + 8 * depth * width
+        if len(b) != want:
+            raise ValueError(
+                f"CountMin.from_bytes: {len(b)} bytes, header declares {want}")
         counts = np.frombuffer(b, dtype=np.int64, offset=_HDR.size).reshape(depth, width).copy()
+        if (counts.sum(axis=1) != total).any():
+            raise ValueError("CountMin.from_bytes: a row sum disagrees with total")
         return cls(depth, width, seed, counts, total)

@@ -38,6 +38,7 @@ symbols are never re-split).
 
 from __future__ import annotations
 
+import warnings
 from collections import Counter
 
 from pyspark.sql import DataFrame
@@ -93,14 +94,23 @@ def bpe_learn(docs: DataFrame, n_merges: int, text_col: str = "text",
     histogram through the driver (top words by count desc, word asc;
     default :data:`DEFAULT_MAX_WORDS` — a deliberate driver-OOM guard);
     ``None`` explicitly opts in to keeping every word (the
-    oracle-checkable setting for bounded corpora).
+    oracle-checkable setting for bounded corpora). A histogram cut at
+    ``max_words`` emits a ``UserWarning`` naming the cap.
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     hist = word_histogram(docs, text_col)
     if max_words is not None:
-        hist = hist.orderBy(F.desc("cnt"), F.asc("word")).limit(max_words)
+        # one row past the cap tells a cut histogram from one that fits,
+        # in the same job
+        hist = hist.orderBy(F.desc("cnt"), F.asc("word")).limit(max_words + 1)
     rows = hist.collect()
+    if max_words is not None and len(rows) > max_words:
+        rows = rows[:max_words]
+        warnings.warn(
+            f"bpe_learn: the word histogram has more than max_words="
+            f"{max_words} distinct words; merges are learned from the top "
+            f"{max_words} by count", UserWarning, stacklevel=2)
     seg = {r["word"]: tuple(r["word"]) + (END,) for r in rows}
     cnt = {r["word"]: int(r["cnt"]) for r in rows}
 

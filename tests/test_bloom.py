@@ -92,3 +92,24 @@ def test_fold_equals_direct_build():
     for bad in (100, 2048, 0):
         with pytest.raises(ValueError, match="fold"):
             bf.fold(bad)
+
+
+def test_from_bytes_rejects_every_prefix_trailing_byte_and_padding():
+    """Every strict prefix of a real blob and the blob plus one byte raise
+    ValueError, and so does a set bit in the packbits padding past m."""
+    bf = Bloom(1001, 3, seed=4)          # 1001 bits: 7 padding bits
+    bf.update_batch(np.arange(300, dtype=np.uint64))
+    b = bf.to_bytes()
+    assert Bloom.from_bytes(b).to_bytes() == b
+    for cut in range(len(b)):
+        with pytest.raises(ValueError):
+            Bloom.from_bytes(b[:cut])
+    with pytest.raises(ValueError):
+        Bloom.from_bytes(b + b"\x00")
+    for pad_bit in range(7):
+        bad = b[:-1] + bytes([b[-1] | (1 << pad_bit)])
+        with pytest.raises(ValueError, match="padding"):
+            Bloom.from_bytes(bad)
+    full = Bloom(1000, 3, seed=4)        # m % 8 == 0: no padding to check
+    full.bits[:] = 1
+    assert Bloom.from_bytes(full.to_bytes()).bits.all()

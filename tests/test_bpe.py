@@ -3,6 +3,8 @@ corpus known-answer, merge-application semantics, partitioning
 invariance, application-join counts, histogram pruning determinism, and
 the DuckDB twin on adversarial words (unicode, within-word repeats)."""
 
+import warnings
+
 import duckdb
 import pytest
 
@@ -65,10 +67,12 @@ def test_max_words_pruning_is_deterministic(spark, corpus):
     """Pruned histogram keeps top words by (cnt desc, word asc); learning
     still runs and merge counts only reflect kept words."""
     m_full, _ = bpe_learn(corpus, n_merges=3)
-    m_top, seg_top = bpe_learn(corpus, n_merges=3, max_words=2)
+    with pytest.warns(UserWarning, match="max_words=2"):
+        m_top, seg_top = bpe_learn(corpus, n_merges=3, max_words=2)
     assert set(seg_top) == {"low", "newest"}   # 6 and 6 beat 3/3/2
     assert m_top != m_full
-    again, _ = bpe_learn(corpus.repartition(5), n_merges=3, max_words=2)
+    with pytest.warns(UserWarning, match="max_words=2"):
+        again, _ = bpe_learn(corpus.repartition(5), n_merges=3, max_words=2)
     assert m_top == again
 
 
@@ -87,6 +91,23 @@ def test_default_max_words_is_bounded(spark, corpus):
     m_default, seg_default = bpe_learn(corpus, n_merges=3)
     m_none, seg_none = bpe_learn(corpus, n_merges=3, max_words=None)
     assert m_default == m_none and seg_default == seg_none
+
+
+def test_capped_histogram_warns_and_uncapped_stays_silent(spark, corpus):
+    """A corpus with more distinct words (6) than max_words warns with the
+    cap; a cap the histogram fits in, and max_words=None, stay silent."""
+    n_words = word_histogram(corpus).count()
+    assert n_words == 6
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        _, seg = bpe_learn(corpus, n_merges=2, max_words=5)
+        _, seg_fit = bpe_learn(corpus, n_merges=2, max_words=n_words)
+        _, seg_none = bpe_learn(corpus, n_merges=2, max_words=None)
+    cap = [w for w in caught if "bpe_learn" in str(w.message)]
+    assert len(cap) == 1 and cap[0].category is UserWarning
+    assert "max_words=5" in str(cap[0].message)
+    assert len(seg) == 5
+    assert len(seg_fit) == len(seg_none) == n_words
 
 
 def test_validation_errors(spark, corpus):

@@ -118,3 +118,50 @@ def test_fold_equals_direct_build():
         cm.fold(width_new=100)  # 100 does not divide 512
     with pytest.raises(ValueError, match="fold"):
         cm.fold(depth_new=0)
+
+
+def test_from_bytes_rejects_truncated_and_trailing():
+    """Every strict prefix of a real blob and the blob plus one byte raise
+    ValueError: depth and width in the header fix the exact size."""
+    cm = CountMin(3, 40, seed=5)
+    cm.update_batch(zipf_stream(2_000))
+    b = cm.to_bytes()
+    assert CountMin.from_bytes(b).to_bytes() == b
+    for cut in range(len(b)):
+        with pytest.raises(ValueError):
+            CountMin.from_bytes(b[:cut])
+    with pytest.raises(ValueError):
+        CountMin.from_bytes(b + b"\x00")
+
+
+def test_from_bytes_rejects_zero_shape_and_inconsistent_total():
+    import struct
+
+    hdr = struct.Struct("<4sIIIq")
+    for depth, width in ((0, 8), (3, 0)):
+        with pytest.raises(ValueError, match="zero"):
+            CountMin.from_bytes(hdr.pack(b"CMS1", depth, width, 0, 0))
+    cm = CountMin(3, 16, seed=1)
+    cm.update_batch(np.arange(50, dtype=np.uint64))
+    b = cm.to_bytes()
+    for total in (cm.total - 1, cm.total + 1, 0):
+        with pytest.raises(ValueError, match="total"):
+            CountMin.from_bytes(hdr.pack(b"CMS1", 3, 16, 1, total)
+                                + b[hdr.size:])
+    counts = cm.counts.copy()
+    counts[1, 0] += 1   # one row off, the others still sum to total
+    with pytest.raises(ValueError, match="total"):
+        CountMin.from_bytes(b[:hdr.size] + counts.tobytes())
+
+
+def test_update_merge_fold_keep_row_sums_equal_total():
+    rng = np.random.default_rng(3)
+    keys = rng.integers(0, 1 << 63, 5_000, dtype=np.uint64)
+    a, b = CountMin(4, 96, seed=2), CountMin(4, 96, seed=2)
+    a.update_batch(keys[:2_000])
+    b.update_batch(keys[2_000:], weights=rng.integers(1, 50, 3_000))
+    b.update_batch(keys[:3], weights=np.array([1 << 55, 7, -2]))
+    a.merge(b)
+    for sk in (a, b, a.fold(2, 32)):
+        assert (sk.counts.sum(axis=1) == sk.total).all()
+        assert CountMin.from_bytes(sk.to_bytes()).total == sk.total
